@@ -1,10 +1,14 @@
-"""SPARQL text front-end: the reference's worked example executed VERBATIM
-(example/query.txt + query_2.txt over dbpedia_example_distgStore.n3), plus
-PREFIX / FILTER builtins / OPTIONAL / UNION / MINUS / modifiers / ASK text
-syntax, all cross-checked against a pure-python BGP matcher or hand-derived
-expectations."""
+"""SPARQL text front-end: PREFIX / FILTER builtins / OPTIONAL / UNION /
+MINUS / modifiers / ASK text syntax, cross-checked against independent
+DataFrame filters or hand-derived expectations. The feature cases run on
+the hand-written DBpedia fixture in tests/data/. The reference's worked
+example (example/query.txt + query_2.txt over
+dbpedia_example_distgStore.n3), checked against a pure-python BGP matcher,
+runs verbatim only where the reference's example/ directory is present at
+EXAMPLE_N3 and is skipped elsewhere."""
 
 import itertools
+import os
 import re
 
 import pytest
@@ -16,6 +20,20 @@ from gstored_spark.sources.ntriples import read_ntriples
 EXAMPLE_N3 = "/root/reference/example/dbpedia_example_distgStore.n3"
 EXAMPLE_Q1 = "/root/reference/example/query.txt"
 EXAMPLE_Q2 = "/root/reference/example/query_2.txt"
+
+# Hand-written graph in the reference example's DBpedia vocabulary and
+# tab-separated `<s>\t<p>\t<o>.` dialect, one triple per line, no
+# duplicates. Hand-derived counts the feature cases rely on:
+#   dbo:director dbr:Woody_Allen    3  (Hannah_and_Her_Sisters, Zelig, Bananas)
+#   dbo:starring dbr:Mia_Farrow     2  (Hannah_and_Her_Sisters, Zelig)
+#   UNION of the two (bag)          5  (Hannah_and_Her_Sisters in both)
+#   films with dbo:director         4  (+ Shield_for_Murder by Edmond_O'Brien)
+#     ... with a foaf:name          2  (Hannah_and_Her_Sisters, Bananas)
+#     ... MINUS foaf:name           2  (Zelig, Shield_for_Murder)
+#   Woody Allen films with a name   2
+#   distinct predicates             4  (director, starring, spouse, name)
+#   triples                        18
+FIXTURE_NT = os.path.join(os.path.dirname(__file__), "data", "dbpedia_films.nt")
 
 
 def _pure_triples():
@@ -55,14 +73,26 @@ def _pure_bgp(triples, patterns, proj):
 
 @pytest.fixture(scope="module")
 def example_triples(spark):
+    df = read_ntriples(spark, FIXTURE_NT).persist()
+    with open(FIXTURE_NT) as f:
+        n_lines = sum(1 for ln in f if ln.strip())
+    assert df.count() == n_lines
+    return df
+
+
+@pytest.fixture(scope="module")
+def reference_triples(spark):
     return read_ntriples(spark, EXAMPLE_N3).persist()
 
 
+@pytest.mark.skipif(
+    not os.path.exists(EXAMPLE_N3), reason=f"reference example absent: {EXAMPLE_N3}"
+)
 @pytest.mark.parametrize("qfile", [EXAMPLE_Q1, EXAMPLE_Q2])
-def test_reference_example_verbatim(spark, example_triples, qfile):
+def test_reference_example_verbatim(spark, reference_triples, qfile):
     text = open(qfile).read()
     q = parse_sparql(text)
-    got = {tuple(r) for r in run_sparql(example_triples, text).collect()}
+    got = {tuple(r) for r in run_sparql(reference_triples, text).collect()}
     want = _pure_bgp(_pure_triples(), q.group.patterns, q.projection)
     assert got == want
     if qfile == EXAMPLE_Q1:
